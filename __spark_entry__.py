@@ -169,7 +169,7 @@ def entry(spark: SparkSession) -> DataFrame:
     s = _events(spark, sf_dir)
     hourly = tier_rollup(s, "1 hour", thresh=0.5)
     daily = cascade_rollup(hourly, "1 day", thresh=0.5)
-    cfg = EngineConfig(velerror_nsig=1, salt_buckets=16)
+    cfg = EngineConfig(velerror_nsig=1)
     lr = linear_rate_per_url(daily.where(F.col("value_avg").isNotNull()),
                              cfg, value_col="value_avg",
                              ts_col="bucket_start")
@@ -448,7 +448,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_linear_rate_kernel(spark, sf):
         s = _events(spark, sf).where(F.col("value").isNotNull())
-        cfg = EngineConfig(velerror_nsig=1, salt_buckets=16)
+        cfg = EngineConfig(velerror_nsig=1)
         lr = linear_rate_per_url(s, cfg, value_col="value",
                                  ts_col="warc_ts")
         return (lr.withColumn("samples", _nn("samples"))
@@ -463,8 +463,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_stack_rate_noiter(spark, sf):
         p = sequential_pairs(_events(spark, sf))
-        cfg = EngineConfig(nsig=10 ** 9, pthr=1, velerror_nsig=1,
-                           salt_buckets=16)
+        cfg = EngineConfig(nsig=10 ** 9, pthr=1, velerror_nsig=1)
         st = stack_rate_per_url(p, cfg, use_mst=False)
         return st.select("url",
                          _nn(F.round("rate", 2)).alias("rate"),
@@ -474,8 +473,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_mask_rate(spark, sf):
         p = sequential_pairs(_events(spark, sf))
-        cfg = EngineConfig(nsig=10 ** 9, pthr=1, velerror_nsig=1,
-                           salt_buckets=16)
+        cfg = EngineConfig(nsig=10 ** 9, pthr=1, velerror_nsig=1)
         st = mask_rate_df(stack_rate_per_url(p, cfg, use_mst=False),
                           maxsig=500.0)
         return st.select("url",
@@ -488,7 +486,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tscuml must equal value - first(value) exactly."""
         s = _events(spark, sf, nulls=False, floor_value=True)
         p = sequential_pairs(s)
-        cfg = EngineConfig(ts_method=2, ts_pthr=0, salt_buckets=16)
+        cfg = EngineConfig(ts_method=2, ts_pthr=0)
         ts = timeseries_per_url(p, cfg, use_mst=False)
         return ts.select(
             "url", _u("epoch_ts").alias("epoch_unix"),
@@ -514,7 +512,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
               .where(F.col("_n") == 4).drop("_rn", "_n"))
         p = sequential_pairs(s4)
         cfg = EngineConfig(ts_method=1, ts_pthr=0, sm_order=2,
-                           sm_factor=-0.25, salt_buckets=16)
+                           sm_factor=-0.25)
         ts = timeseries_per_url(p, cfg, use_mst=False)
         return ts.select(
             "url", _u("epoch_ts").alias("epoch_unix"),
@@ -528,7 +526,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         disconnect the graph and void the invariant."""
         p = network_pairs(_events(spark, sf, nulls=False), max_span_days=30,
                           max_pairs_per_epoch=2)
-        ann = mst_annotate(p, EngineConfig(salt_buckets=16))
+        ann = mst_annotate(p, EngineConfig())
         return (ann.groupBy("url")
                 .agg(F.sum(F.col("in_mst").cast("long")).alias("mst_edges"),
                      F.countDistinct("ts_first", "ts_second").alias("n_pairs")))
@@ -558,7 +556,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pyrate_spark.operators.corrections import closure_loop_counts
         p = network_pairs(_events(spark, sf, nulls=False),
                           max_span_days=30, max_pairs_per_epoch=2)
-        return closure_loop_counts(p, EngineConfig(salt_buckets=16),
+        return closure_loop_counts(p, EngineConfig(),
                                    loop_length=3)
     q["closure_triangles"] = q_closure_triangles
 
@@ -574,7 +572,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         p = network_pairs(_events(spark, sf, nulls=False),
                           max_span_days=30, max_pairs_per_epoch=2)
         cfg = EngineConfig(max_loop_length=3,
-                           max_loop_redundancy=10 ** 6, salt_buckets=16)
+                           max_loop_redundancy=10 ** 6)
         return closure_sums(p, cfg).select(
             "url", "loop_key",
             F.col("n_edges").cast("long").alias("n_edges"),
@@ -597,7 +595,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         p = network_pairs(_events(spark, sf, nulls=False),
                           max_span_days=30, max_pairs_per_epoch=2)
         cfg = EngineConfig(max_loop_length=3,
-                           max_loop_redundancy=10 ** 6, salt_buckets=16)
+                           max_loop_redundancy=10 ** 6)
         bound = 10.0 * math.pi
         s = closure_sums(p, cfg).withColumn(
             "closure", _duck_round5("closure"))
@@ -614,7 +612,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pyrate_spark.operators.corrections import orbital_network
         s = _events(spark, sf, nulls=False, floor_value=True)
         p = sequential_pairs(s)
-        out = orbital_network(p, EngineConfig(salt_buckets=16),
+        out = orbital_network(p, EngineConfig(),
                               use_mst=False)
         return out.select(
             "url", _u("ts_first").alias("first_unix"),
@@ -635,7 +633,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         p = network_pairs(_events(spark, sf, nulls=False),
                           max_span_days=30, max_pairs_per_epoch=2)
         cfg = EngineConfig(max_loop_length=3, max_loop_redundancy=10 ** 6,
-                           closure_thr=1e18, salt_buckets=16)
+                           closure_thr=1e18)
         out = closure_fixpoint(p, cfg)
         return (out.groupBy("url")
                 .agg(F.count(F.lit(1)).alias("n_surviving"),
@@ -664,7 +662,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
              .groupBy("url", "warc_ts")            # collapse dup seconds
              .agg(F.avg("value").alias("value"), F.avg("aux").alias("aux"))
              .where(F.col("value").isNotNull()))
-        out = dem_error_analog(s, EngineConfig(salt_buckets=16))
+        out = dem_error_analog(s, EngineConfig())
         return (out.groupBy("url")
                 .agg(F.first("aux_coef").alias("c"))
                 .select("url",
@@ -681,7 +679,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         pytest-verified instead."""
         from pyrate_spark.operators.corrections import maxvar_full
         s = _events(spark, sf)
-        out = maxvar_full(s, EngineConfig(salt_buckets=16),
+        out = maxvar_full(s, EngineConfig(),
                           bucket_seconds=86400, calc_alpha=False)
         # f32-quantize before round: partial-sum order in avg()/FFT varies
         # with partitioning at last-ulp scale; both sides collapse to the
@@ -807,7 +805,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
              .join(F.broadcast(geom), ["y", "x"])
              .select("url", "warc_ts", "value",
                      F.col("bperp").alias("aux")))
-        out = dem_error_analog(s, EngineConfig(salt_buckets=16))
+        out = dem_error_analog(s, EngineConfig())
         return (out.groupBy("url")
                 .agg(F.first("aux_coef").alias("c"))
                 .select("url",
@@ -821,7 +819,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         tier payload round-trips bit-exactly inside the engine."""
         from pyrate_spark.operators.tiersink import decode_tier, encode_tier
         t = tier_rollup(_events(spark, sf), "1 hour", thresh=0.5)
-        enc = encode_tier(t, "1 hour", EngineConfig(salt_buckets=16))
+        enc = encode_tier(t, "1 hour", EngineConfig())
         dec = decode_tier(enc)
         return dec.select("url", _u("bucket_start").alias("bucket_unix"),
                           _nn(F.round("value_avg", 5)).alias("value_avg"))
@@ -1300,7 +1298,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_temporal_highpass(spark, sf):
         """T11: Gaussian-weighted high-pass on the irregular time axis.
         SQL twin = per-url self-join over the interval-midpoint axis."""
-        cfg = EngineConfig(tlpf_cutoff_days=2, tlpf_pthr=1, salt_buckets=16)
+        cfg = EngineConfig(tlpf_cutoff_days=2, tlpf_pthr=1)
         s = _events(spark, sf)
         out = temporal_highpass_per_url(s, cfg)
         return out.select("url", _u("epoch_ts").alias("ts_unix"),
@@ -1318,7 +1316,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pyrate_spark.operators.corrections import cohort_lowpass_fft
         s = _events(spark, sf)
         cohort = F.pmod(F.col("url").cast("long"), F.lit(8)).cast("string")
-        out = cohort_lowpass_fft(s, EngineConfig(salt_buckets=16),
+        out = cohort_lowpass_fft(s, EngineConfig(),
                                  bucket_seconds=86400, cutoff_days=5.0,
                                  cohort_expr=cohort)
         return out.select(
@@ -2042,8 +2040,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from pyrate_spark.operators.grouped import linear_rate_from_pairs
         s = _events(spark, sf, nulls=False, floor_value=True)
         p = sequential_pairs(s)
-        cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1,
-                           salt_buckets=16)
+        cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1)
         two = linear_rate_per_url(
             timeseries_per_url(p, cfg, use_mst=False), cfg)
         fus = linear_rate_from_pairs(p, cfg, use_mst=False)

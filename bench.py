@@ -140,7 +140,7 @@ def main():
 
         def enc():
             e = encode_tier(hourly, "1 hour",
-                            cfg=EngineConfig(salt_buckets=CPUS * 8))
+                            cfg=EngineConfig())
             return e.agg(F.sum("n_points").alias("p"),
                          F.sum("bytes_encoded").alias("b")).first()
 
@@ -158,7 +158,7 @@ def main():
         hourly2 = tier_rollup(series, "1 hour", thresh=0.5)
         enc_df = encode_tier(
             hourly2, "1 hour",
-            cfg=EngineConfig(salt_buckets=CPUS * 8)).persist()
+            cfg=EngineConfig()).persist()
         enc_df.count()                      # fill cache, untimed
         n_pts = int(enc_df.agg(F.sum("n_points")).first()[0])
         timed("gorilla_tier_decode",
@@ -168,8 +168,7 @@ def main():
         enc_df.unpersist()
 
     # ---- per-url inversion + linear rate (grouped-map kernels) ----
-    cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1,
-                       salt_buckets=CPUS * 8)
+    cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1)
     pairs = network_pairs(series, max_span_days=3,
                           max_pairs_per_epoch=2).persist()
     meta["pair_rows"] = pairs.count()          # fill the cache, untimed
@@ -179,7 +178,7 @@ def main():
                                 max_pairs_per_epoch=2).count())
 
     # hot-key detection ONCE per pipeline, threaded through the grouped
-    # stages (the salted_buckets contract; r5 — previously every timed
+    # stages (keyed_apply's hot_keys contract; r5 — previously every timed
     # rep re-ran the counting aggregation over the persisted pairs)
     from pyrate_spark.operators.grouped import detect_hot_keys
     hot, hot_walls = None, []
@@ -407,8 +406,7 @@ def main():
             F.col("user_id").cast("string").alias("url"),
             F.date_trunc("second", "ts").alias("warc_ts"),
             F.col("value"))
-        scfg = EngineConfig(nsig=3, pthr=3, velerror_nsig=1,
-                            salt_buckets=CPUS)
+        scfg = EngineConfig(nsig=3, pthr=3, velerror_nsig=1)
         # hot keys once (as for pages_inversion): otherwise every rep
         # re-executes the un-persisted pair DAG a second time just for
         # the detection count

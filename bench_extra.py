@@ -134,8 +134,7 @@ def main():
         from pyrate_spark.operators.grouped import (detect_hot_keys,
                                                     linear_rate_from_pairs)
         from pyrate_spark.operators.pairs import network_pairs
-        cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1,
-                           salt_buckets=CPUS * 8)
+        cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1)
         pairs = network_pairs(series, max_span_days=3,
                               max_pairs_per_epoch=2).persist()
         pairs.count()

@@ -53,8 +53,6 @@ class EngineConfig:
     ifg_drop_thr: float = 0.5      # breach-fraction drop gate 2
 
     # --- execution ---
-    salt_buckets: int = 64      # key-batching buckets for grouped-map UDFs
-    hot_key_salt: int = 8       # extra salt for skewed keys
     checkpoint_dir: str = ""    # per-partition checkpoint manifests; "" = off
 
     def __post_init__(self):
@@ -101,8 +99,6 @@ _RANGES = (
     ("min_loops_per_ifg", 0, None, None),         # 0 = gate off (engine
                                                   # ext.; reference min 1)
     ("ifg_drop_thr", 0.01, 1.0, None),            # ifg_drop_thr
-    ("salt_buckets", 1, None, None),              # engine knob
-    ("hot_key_salt", 1, None, None),              # engine knob
 )
 
 

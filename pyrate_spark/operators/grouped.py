@@ -2,22 +2,29 @@
 
 Execution model (this file is where the scale design lives):
 
-- **Key-batched groups.** ``groupBy('url')`` would give one tiny pandas
-  frame per key — millions of Arrow round-trips. Instead we group by a
-  hash *bucket* of the url (``_bucket``): each Arrow batch carries many
-  keys, and the kernel loops keys in numpy inside the worker. This is
-  the survey's prescription ("batch keys per group", SURVEY.md §2.5)
-  and the reference's own tiling idea (Tile/IfgPart, shared.py:1135-1161)
-  recast for Spark: bucket ≈ tile.
+- **One keyed plan, many keys per Python call.** ``groupBy('url')``
+  would give one tiny pandas frame per key — millions of Arrow
+  round-trips. Instead every key's rows share one partition and the
+  kernel takes a whole partition, looping keys in numpy inside the
+  worker. This is the survey's prescription ("batch keys per group",
+  SURVEY.md §2.5) and the reference's own tiling idea (Tile/IfgPart,
+  shared.py:1135-1161) recast for Spark: partition ≈ tile. The layout
+  is the input's own when it is already url-clustered and persisted
+  (:func:`clustered_by_key`: zero new exchange), otherwise ONE explicit
+  ``repartition(2 x shuffle partitions, key)``.
 
-- **Explicit hot-key salting.** A url with 100x the snapshots (the skew
-  knob in FIXTURES.md F1) would dominate its bucket. ``salted_buckets``
-  counts keys (one cheap agg), and every key above ``hot_factor`` x the
-  mean row-count gets a dedicated bucket via a broadcast map join —
-  BASELINE.json's "explicit salt-based skew handling for hot urls".
-  Non-hot keys hash uniformly. AQE's skew-join splitting cannot help a
-  grouped-map (a key is indivisible); isolating hot keys restores
-  near-uniform task sizes.
+- **Explicit hot-key isolation.** A url with 100x the snapshots (the
+  skew knob in FIXTURES.md F1) would dominate its partition.
+  :func:`detect_hot_keys` counts keys (one cheap agg); every key above
+  ``hot_factor`` x the mean row-count leaves the cold layout and gets
+  a partition of its own through a per-key salt (:func:`_spread_hot`)
+  — BASELINE.json's "explicit salt-based skew handling for hot urls".
+  AQE's skew-join splitting cannot help a grouped-map (a key is
+  indivisible); isolating hot keys restores near-uniform task sizes.
+
+- **Null keys are one group**, as in SQL ``GROUP BY``: they always
+  ride the cold side, and the kernels' ``group_slices`` treats None as
+  one key.
 
 - **No per-row Python.** Everything crosses the JVM/Python boundary as
   Arrow columns; inside, per-key slices are numpy views from a single
@@ -33,29 +40,27 @@ Kernel semantics and reference citations: pyrate_spark.kernels.
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from pyrate_spark.config import EngineConfig, DEFAULT
-from pyrate_spark.operators.udf_kernels import (make_linear_rate_fn,
-                                                make_mst_fn,
-                                                make_stack_fn,
-                                                make_temporal_hp_fn,
-                                                make_timeseries_fn)
+from pyrate_spark.operators.udf_kernels import (
+    make_linear_rate_fn, make_mst_fn, make_stack_fn, make_temporal_hp_fn,
+    make_timeseries_fn, make_timeseries_rates_arrow_fn)
 
 
 # --------------------------------------------------------------------------
-# bucketing / salting
+# keyed layout
 # --------------------------------------------------------------------------
 
 def detect_hot_keys(df: DataFrame, key: str = "url",
                     hot_factor: float = 8.0) -> tuple:
-    """One counting aggregation -> the (tiny, sorted) set of keys whose
-    row-count exceeds hot_factor x mean. Compute this ONCE per pipeline
-    and thread the result through every grouped stage via ``hot_keys``
-    instead of paying a detection pass per stage.
+    """One counting aggregation -> the (tiny, sorted) set of non-null
+    keys whose row-count exceeds hot_factor x mean. Compute this ONCE
+    per pipeline and thread the result through every grouped stage via
+    ``hot_keys`` instead of paying a detection pass per stage. The null
+    key is never hot: its group always rides the cold side.
 
     Default lowered 20 -> 8 (r8): per-key kernel cost is O(epochs^3),
     so a key at 19x the mean row count is ~7000x the mean COMPUTE —
@@ -68,45 +73,10 @@ def detect_hot_keys(df: DataFrame, key: str = "url",
     counts = df.groupBy(key).count()
     stats = counts.agg(F.avg("count").alias("mean")).first()
     mean = stats["mean"] or 1.0
-    rows = (counts.where(F.col("count") > F.lit(hot_factor * mean))
+    rows = (counts.where(F.col(key).isNotNull()
+                         & (F.col("count") > F.lit(hot_factor * mean)))
             .select(key).collect())       # tiny by construction
     return tuple(sorted(r[0] for r in rows))
-
-
-def salted_buckets(df: DataFrame, key: str = "url",
-                   n_buckets: int = 64, hot_factor: float = 8.0,
-                   detect_hot: bool = True,
-                   hot_keys: tuple | None = None) -> DataFrame:
-    """Append ``_bucket``: uniform hash bucket, except keys whose
-    row-count exceeds hot_factor x mean get dedicated buckets.
-
-    ``hot_keys`` supplies a precomputed hot set (see detect_hot_keys);
-    otherwise ``detect_hot`` runs one counting aggregation over the
-    input — worth it on raw skewed observations, wasted on derived
-    frames whose per-key row count is bounded (e.g. inversion output:
-    one row per epoch). Detection re-executes the upstream DAG when the
-    input is not persisted — callers chaining grouped stages should
-    persist the intermediate, pass hot_keys, or detect_hot=False.
-    Dedicated bucket ids come from the driver-side enumeration of the
-    hot set (no global-window shuffle-to-one-partition)."""
-    if hot_keys is None:
-        if not detect_hot:
-            hot_keys = ()
-        else:
-            hot_keys = detect_hot_keys(df, key, hot_factor)
-    if not hot_keys:
-        return df.withColumn(
-            "_bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)))
-    hot = df.sparkSession.createDataFrame(
-        [(k, n_buckets + i) for i, k in enumerate(hot_keys)],
-        df.select(key).schema.add("_hot_bucket", "long"))
-    return (df.join(F.broadcast(hot), key, "left")
-            .withColumn(
-                "_bucket",
-                F.coalesce(
-                    F.col("_hot_bucket"),
-                    F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets))))
-            .drop("_hot_bucket"))
 
 
 def clustered_by_key(df: DataFrame, key: str) -> bool:
@@ -123,8 +93,8 @@ def clustered_by_key(df: DataFrame, key: str) -> bool:
     partitioning must be HashPartitioning over a single
     AttributeReference whose exprId is the SAME attribute as the
     frame's ``key`` output column, so a rename / rebuild / repartition
-    by anything else makes this return False and the caller falls back
-    to the explicit bucketed exchange.
+    by anything else makes this return False and the caller lays the
+    input out with its own explicit exchange.
 
     The frame must additionally bottom out (through Project/Filter
     only) in a PERSISTED relation: a cached plan's partition layout is
@@ -133,130 +103,155 @@ def clustered_by_key(df: DataFrame, key: str) -> bool:
     collapse a small-byte but compute-heavy stage to ONE partition
     (measured: a 98k-row pair window coalesced 32 -> 1 and turned the
     python stage into a serial 7 s task — bytes are the wrong cost
-    model for grouped-map compute, the same reason _bucketed uses an
-    explicit coalesce-exempt repartition)."""
-    if os.environ.get("PYRATE_NO_CLUSTER_REUSE"):
+    model for grouped-map compute, the same reason :func:`_keyed_layout`
+    uses an explicit coalesce-exempt repartition)."""
+    node = df._jdf.queryExecution().optimizedPlan()
+    while node.getClass().getSimpleName() in ("Project", "Filter"):
+        node = node.children().head()
+    if node.getClass().getSimpleName() != "InMemoryRelation":
         return False
-    try:
-        node = df._jdf.queryExecution().optimizedPlan()
-        while node.getClass().getSimpleName() in ("Project", "Filter"):
-            node = node.children().head()
-        if node.getClass().getSimpleName() != "InMemoryRelation":
-            return False
-        qe = df._jdf.queryExecution()
-        plan = qe.executedPlan()
-        if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-            plan = plan.initialPlan()
-        part = plan.outputPartitioning()
-        if part.getClass().getSimpleName() != "HashPartitioning":
-            return False
-        exprs = part.expressions()
-        if exprs.length() != 1:
-            return False
-        e = exprs.apply(0)
-        if e.getClass().getSimpleName() != "AttributeReference" \
-                or e.name() != key:
-            return False
-        out = qe.analyzed().output().iterator()
-        while out.hasNext():
-            a = out.next()
-            if a.name() == key:
-                return bool(a.exprId().equals(e.exprId()))
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    part = plan.outputPartitioning()
+    if part.getClass().getSimpleName() != "HashPartitioning":
         return False
-    except Exception:
+    exprs = part.expressions()
+    if exprs.length() != 1:
         return False
+    e = exprs.apply(0)
+    if e.getClass().getSimpleName() != "AttributeReference" \
+            or e.name() != key:
+        return False
+    out = qe.analyzed().output().iterator()
+    while out.hasNext():
+        a = out.next()
+        if a.name() == key:
+            return bool(a.exprId().equals(e.exprId()))
+    return False
 
 
-def _spread_hot(hot: DataFrame, key: str, n_hot: int) -> DataFrame:
-    """Range-partition the hot subset one-key-per-partition before its
-    groupBy: HASH partitioning 25 dedicated keys into 32 reduce
-    partitions put 3 keys in one partition (measured), serialising
-    3 x ~0.7 s O(epochs^3) inversions into the stage's deterministic
-    critical path. RangePartitioning on the key still satisfies the
-    groupBy's ClusteredDistribution (all rows of a key share a range),
-    so no second exchange — and with N = n_hot partitions over n_hot
-    distinct sampled keys the spread is ~1:1."""
-    return hot.repartitionByRange(max(1, n_hot), key)
+HOT = "_hot"
 
 
-def keyed_apply(df: DataFrame, key: str, n_buckets: int, fn, schema,
+def _spark_hash_long(v: int) -> int:
+    """Spark SQL ``hash(v)`` of a bigint ``0 <= v < 2**31``:
+    Murmur3_x86_32.hashLong with seed 42 (the low word, then a zero
+    high word) — the hash HashPartitioning takes ``pmod(_, n)`` of."""
+    m = 0xFFFFFFFF
+
+    def mix(h, k):
+        k = (k * 0xcc9e2d51) & m
+        k = ((k << 15) | (k >> 17)) & m
+        h ^= (k * 0x1b873593) & m
+        h = ((h << 13) | (h >> 19)) & m
+        return (h * 5 + 0xe6546b64) & m
+
+    h = mix(mix(42, v), 0) ^ 8
+    h ^= h >> 16
+    h = (h * 0x85ebca6b) & m
+    h ^= h >> 13
+    h = (h * 0xc2b2ae35) & m
+    h ^= h >> 16
+    return h - (1 << 32) if h >> 31 else h
+
+
+def _spread_hot(hot: DataFrame, key: str, hot_keys: tuple) -> DataFrame:
+    """Hash-partition the hot subset EXACTLY one key per partition, on
+    a salt column ``_hot``: hot key i gets the first id whose Spark hash
+    lands in partition i (:func:`_spark_hash_long`, computed on the
+    driver, so choosing the salts runs no job).
+
+    Per-key cost is O(epochs^3), so two hot keys sharing a partition
+    serialise into the stage's critical path. Placement by the key
+    itself cannot promise that: HASH partitioning 25 dedicated keys
+    into 32 partitions put 3 keys in one (measured), and a range
+    exchange draws its bounds from sampled row weights, so unequal or
+    unevenly sampled keys share a range (measured: 2 of 3 equal-sized
+    keys in one partition)."""
+    n = len(hot_keys)
+    salt, sid = {}, 0
+    while len(salt) < n:
+        salt.setdefault(_spark_hash_long(sid) % n, sid)
+        sid += 1
+    lookup = F.create_map(*[c for i, k in enumerate(hot_keys)
+                            for c in (F.lit(k), F.lit(salt[i]).cast("long"))])
+    return (hot.withColumn(HOT, lookup[F.col(key)])
+            .repartition(n, HOT))
+
+
+def _keyed_layout(df: DataFrame, key: str, detect_hot: bool,
+                  hot_keys: tuple | None) -> tuple:
+    """The one keyed layout: (cold, hot).
+
+    ``cold`` holds every non-hot key, null keys included, with each
+    key's rows in one partition: the input's own partitioning when
+    :func:`clustered_by_key` holds, otherwise one explicit
+    ``repartition(2 x shuffle partitions, key)``. The explicit count
+    matters at every scale: AQE's byte-based coalescing would fold a
+    small-byte but compute-heavy Python stage into one task, and a
+    user-specified count is exempt from coalescing. 2 x the shuffle
+    partitions keeps every core fed without task-dispatch overhead
+    dominating (measured on local[32], 150k pairs); at cluster scale
+    size ``spark.sql.shuffle.partitions`` so one partition's rows fit
+    executor memory (~100-500 MB) — the reference's tile-sizing rule
+    (shared.py:1135-1143) transplanted.
+
+    ``hot`` is the hot subset spread one key per partition with its
+    ``_hot`` salt column (:func:`_spread_hot`), or None when there are
+    no hot keys. The hot subset is tiny by construction (hot_factor x
+    mean), so its exchange moves only those rows.
+
+    ``hot_keys`` supplies a precomputed hot set; otherwise
+    ``detect_hot`` runs one counting aggregation over the input — worth
+    it on raw skewed observations, wasted on derived frames whose
+    per-key row count is bounded (e.g. inversion output: one row per
+    epoch). Detection re-executes the upstream DAG when the input is
+    not persisted — callers chaining grouped stages should persist the
+    intermediate, pass hot_keys, or detect_hot=False."""
+    if hot_keys is None:
+        hot_keys = detect_hot_keys(df, key) if detect_hot else ()
+    cold, hot = df, None
+    if hot_keys:
+        hot_list = list(hot_keys)
+        cold = df.where(F.col(key).isNull() | ~F.col(key).isin(hot_list))
+        hot = _spread_hot(df.where(F.col(key).isin(hot_list)), key,
+                          hot_keys)
+    if not clustered_by_key(df, key):
+        parts = 2 * int(df.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"))
+        cold = cold.repartition(parts, key)
+    return cold, hot
+
+
+def keyed_apply(df: DataFrame, key: str, fn, schema,
                 detect_hot: bool = True,
                 hot_keys: tuple | None = None) -> DataFrame:
-    """Run a many-keys-per-frame grouped-map kernel. Two plans:
+    """Run a many-keys-per-frame grouped-map kernel over the one keyed
+    layout (:func:`_keyed_layout`) as ONE ``mapInPandas`` over the union
+    of its cold and hot partitions: ``fn`` gets one partition's rows at
+    a time and slices per key itself, so partition boundaries are as
+    good as group boundaries; peak worker memory is one partition's
+    columns. Each hot key is a partition, and so a task, of its own:
+    per-key kernel cost is superlinear in per-key observation count
+    (the inversion is O(epochs^3)), so a partition that happens to hold
+    several dense keys becomes a 10-20x straggler (measured: 43 s max
+    vs 2 s median task)."""
+    cold, hot = _keyed_layout(df, key, detect_hot, hot_keys)
+    laid = cold if hot is None else cold.unionByName(hot.drop(HOT))
 
-    - input already hash-clustered by ``key`` (the upstream window /
-      aggregation partitioning, detected soundly by
-      :func:`clustered_by_key`): ``mapInPandas`` over the existing
-      partitions — ZERO additional exchange, no salting join — for the
-      cold keys, which are ~all the rows. The kernels batch many keys
-      per frame and slice per key themselves, so partition boundaries
-      are as good as bucket boundaries; peak worker memory is one
-      partition's columns, the same ~100-500 MB budget the bucket-count
-      rule targets at cluster scale.
+    def mfn(batches):
+        import pandas as pd
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        pdf = (pdfs[0] if len(pdfs) == 1
+               else pd.concat(pdfs, ignore_index=True))
+        if len(pdf):
+            yield fn(pdf)
 
-      HOT keys still take a dedicated exchanged path: per-key kernel
-      cost is superlinear in per-key observation count (the inversion
-      is O(epochs^3)), so a partition that happens to hold several
-      20x-dense keys becomes a 10-20x straggler (measured: 43 s max vs
-      2 s median task). The hot subset is tiny by construction
-      (hot_factor x mean), so its ``groupBy(key)`` exchange moves only
-      those rows and each hot key becomes its own task — the exact
-      skew isolation the salted path had, at a fraction of the shuffle.
-    - otherwise: the r1-r7 salted-bucket path (one exchange, explicit
-      hot-key isolation).
-    """
-    if clustered_by_key(df, key):
-        if hot_keys is None:
-            hot_keys = (detect_hot_keys(df, key) if detect_hot else ())
-
-        def mfn(batches):
-            import pandas as pd
-            pdfs = list(batches)
-            if not pdfs:
-                return
-            pdf = (pdfs[0] if len(pdfs) == 1
-                   else pd.concat(pdfs, ignore_index=True))
-            if len(pdf):
-                yield fn(pdf)
-
-        if not hot_keys:
-            return df.mapInPandas(mfn, schema)
-        hot_list = [k for k in hot_keys]
-        cold = df.where(~F.col(key).isin(hot_list))
-        hot = _spread_hot(df.where(F.col(key).isin(hot_list)), key,
-                          len(hot_list))
-        return (cold.mapInPandas(mfn, schema)
-                .unionByName(hot.groupBy(key).applyInPandas(fn, schema)))
-    return (_bucketed(df, key, n_buckets, detect_hot=detect_hot,
-                      hot_keys=hot_keys)
-            .groupBy("_bucket").applyInPandas(fn, schema))
-
-
-def _bucketed(df: DataFrame, key: str, n_buckets: int,
-              detect_hot: bool = True,
-              hot_keys: tuple | None = None) -> DataFrame:
-    """Salt + explicit repartition on the bucket. The explicit
-    ``repartition(n, _bucket)`` matters at every scale: AQE's byte-based
-    partition coalescing would fold a small-byte but compute-heavy
-    Python stage into one task (bytes are the wrong cost model for
-    grouped-map UDFs); a user-specified repartition is exempt from
-    coalescing and already satisfies the groupBy clustering, so no
-    second exchange is inserted.
-
-    Bucket-count vs partition-count (measured on local[32], 150k pairs):
-    partitions ~ 2x parallelism keeps every core fed without task-dispatch
-    overhead dominating, and buckets >= 8x partitions gives the bin-packer
-    enough granularity that per-partition compute evens out (stragglers
-    come from coarse buckets, not from Spark). At cluster scale choose
-    n_buckets so one bucket's rows fit executor memory (~100-500 MB) —
-    the reference's tile-sizing rule (shared.py:1135-1143) transplanted.
-    """
-    spark_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    parts = spark_parts * 2
-    n_buckets = max(n_buckets, parts * 8)
-    return (salted_buckets(df, key, n_buckets, detect_hot=detect_hot,
-                           hot_keys=hot_keys)
-            .repartition(parts, "_bucket"))
+    return laid.mapInPandas(mfn, schema)
 
 
 def warm_python_workers(spark, n: Optional[int] = None) -> None:
@@ -291,7 +286,6 @@ MST_SCHEMA = ("url string, ts_first timestamp, ts_second timestamp, "
 
 def timeseries_per_url(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
                        use_mst: bool = True,
-                       n_buckets: Optional[int] = None,
                        detect_hot: bool = True,
                        hot_keys: Optional[tuple] = None) -> DataFrame:
     """Pairwise observations -> per-epoch incremental/cumulative series
@@ -300,8 +294,7 @@ def timeseries_per_url(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
     fn = make_timeseries_fn(cfg.ts_method, cfg.ts_pthr, cfg.sm_order,
                             cfg.sm_factor, use_mst,
                             getattr(cfg, "vcm_mode", "identity"))
-    return keyed_apply(_ts_input(pairs, use_mst), "url",
-                       n_buckets or cfg.salt_buckets, fn, TS_SCHEMA,
+    return keyed_apply(_ts_input(pairs, use_mst), "url", fn, TS_SCHEMA,
                        detect_hot, hot_keys)
 
 
@@ -323,15 +316,14 @@ def _ts_input(pairs: DataFrame, use_mst: bool = True) -> DataFrame:
 
 def stack_rate_per_url(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
                        use_mst: bool = True,
-                       n_buckets: Optional[int] = None,
                        detect_hot: bool = True,
                        hot_keys: Optional[tuple] = None) -> DataFrame:
     """Iterative WLS stacking per url (stack.py:92-165); ``error`` is
     scaled by velerror_nsig (stack.py:60)."""
     fn = make_stack_fn(cfg.nsig, cfg.pthr, float(cfg.velerror_nsig),
                        use_mst, getattr(cfg, "vcm_mode", "identity"))
-    return keyed_apply(pairs, "url", n_buckets or cfg.salt_buckets,
-                       fn, STACK_SCHEMA, detect_hot, hot_keys)
+    return keyed_apply(pairs, "url", fn, STACK_SCHEMA, detect_hot,
+                       hot_keys)
 
 
 def mask_rate_df(rates: DataFrame, maxsig: float) -> DataFrame:
@@ -346,7 +338,6 @@ def mask_rate_df(rates: DataFrame, maxsig: float) -> DataFrame:
 
 
 def linear_rate_per_url(tscuml_df: DataFrame, cfg: EngineConfig = DEFAULT,
-                        n_buckets: Optional[int] = None,
                         value_col: str = "tscuml",
                         ts_col: str = "epoch_ts") -> DataFrame:
     """Linear regression of the cumulative series per url
@@ -356,13 +347,11 @@ def linear_rate_per_url(tscuml_df: DataFrame, cfg: EngineConfig = DEFAULT,
     ``error`` scaled by velerror_nsig (timeseries.py:379). No hot pass:
     per-key rows are bounded by epoch count."""
     fn = make_linear_rate_fn(float(cfg.velerror_nsig), value_col, ts_col)
-    return keyed_apply(tscuml_df, "url", n_buckets or cfg.salt_buckets,
-                       fn, LR_SCHEMA, detect_hot=False)
+    return keyed_apply(tscuml_df, "url", fn, LR_SCHEMA, detect_hot=False)
 
 
 def linear_rate_from_pairs(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
                            use_mst: bool = True,
-                           n_buckets: Optional[int] = None,
                            detect_hot: bool = True,
                            hot_keys: Optional[tuple] = None) -> DataFrame:
     """Fused pairs -> linear rates: timeseries_per_url +
@@ -372,75 +361,56 @@ def linear_rate_from_pairs(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
     first stage) never leaves the python worker — one exchange and one
     Arrow round trip instead of two of each. Use when only the rates
     are needed; keep the two-stage form when the time series itself is
-    a product."""
-    from pyrate_spark.operators.udf_kernels import (
-        make_timeseries_rates_arrow_fn, make_timeseries_rates_fn)
-    vcm = getattr(cfg, "vcm_mode", "identity")
-    fn = make_timeseries_rates_fn(cfg.ts_method, cfg.ts_pthr,
-                                  cfg.sm_order, cfg.sm_factor, use_mst,
-                                  vcm, float(cfg.velerror_nsig))
+    a product.
+
+    Both sides of the keyed layout (:func:`_keyed_layout`) cross the
+    grouped-list Arrow boundary in ONE ``mapInArrow``: each url is
+    aggregated to ONE row JVM-side and shipped as
+    (url, sorted list<struct(t1,t2,dv[,w][,mv])>), so each url string
+    crosses once instead of per pair row. The aggregation adds no
+    exchange: the cold side is clustered by url, and the hot side
+    groups by (``_hot``, url) over its hash(``_hot``) layout."""
     src = _ts_input(pairs, use_mst)
-    if clustered_by_key(src, "url"):
-        # r8 grouped-list Arrow boundary: aggregate each url to ONE
-        # row JVM-side — the agg reuses the pair network's url
-        # clustering (zero exchange) — and ship
-        # (url, sorted list<struct(t1,t2,dv[,w][,mv])>) so each url
-        # string crosses the boundary once instead of per pair row.
-        # Hot keys still take the dedicated exchanged path (per-key
-        # cost is O(epochs^3)); see keyed_apply.
-        if hot_keys is None:
-            hot_keys = detect_hot_keys(src) if detect_hot else ()
-        has_w = "nan_fraction" in src.columns
-        has_mv = "maxvar" in src.columns
-        fields = [F.unix_timestamp("ts_first").alias("t1"),
-                  F.unix_timestamp("ts_second").alias("t2"),
-                  F.col("delta_value").alias("dv")]
-        if has_w:
-            fields.append(F.col("nan_fraction").alias("w"))
-        if has_mv:
-            fields.append(F.col("maxvar").alias("mv"))
-        afn = make_timeseries_rates_arrow_fn(
-            cfg.ts_method, cfg.ts_pthr, cfg.sm_order, cfg.sm_factor,
-            use_mst, vcm, float(cfg.velerror_nsig), has_w, has_mv)
-        cold = src
-        if hot_keys:
-            cold = src.where(~F.col("url").isin(list(hot_keys)))
-        out_cold = (cold
-                    .groupBy("url")
-                    .agg(F.sort_array(F.collect_list(
-                        F.struct(*fields))).alias("_s"))
-                    .mapInArrow(afn, LR_SCHEMA))
-        if not hot_keys:
-            return out_cold
-        hot = _spread_hot(src.where(F.col("url").isin(list(hot_keys))),
-                          "url", len(hot_keys))
-        return out_cold.unionByName(
-            hot.groupBy("url").applyInPandas(fn, LR_SCHEMA))
-    return keyed_apply(src, "url",
-                       n_buckets or cfg.salt_buckets, fn, LR_SCHEMA,
-                       detect_hot, hot_keys)
+    has_w = "nan_fraction" in src.columns
+    has_mv = "maxvar" in src.columns
+    fields = [F.unix_timestamp("ts_first").alias("t1"),
+              F.unix_timestamp("ts_second").alias("t2"),
+              F.col("delta_value").alias("dv")]
+    if has_w:
+        fields.append(F.col("nan_fraction").alias("w"))
+    if has_mv:
+        fields.append(F.col("maxvar").alias("mv"))
+    afn = make_timeseries_rates_arrow_fn(
+        cfg.ts_method, cfg.ts_pthr, cfg.sm_order, cfg.sm_factor,
+        use_mst, getattr(cfg, "vcm_mode", "identity"),
+        float(cfg.velerror_nsig), has_w, has_mv)
+
+    listed = F.sort_array(F.collect_list(F.struct(*fields))).alias("_s")
+    cold, hot = _keyed_layout(src, "url", detect_hot, hot_keys)
+    lists = cold.groupBy("url").agg(listed)
+    if hot is not None:
+        lists = lists.unionByName(
+            hot.groupBy(HOT, "url").agg(listed).drop(HOT))
+    return lists.mapInArrow(afn, LR_SCHEMA)
 
 
 def temporal_highpass_per_url(series: DataFrame,
                               cfg: EngineConfig = DEFAULT,
                               value_col: str = "value",
-                              ts_col: str = "warc_ts",
-                              n_buckets: Optional[int] = None) -> DataFrame:
+                              ts_col: str = "warc_ts") -> DataFrame:
     """Gaussian temporal high-pass per url on an irregular axis
     (aps.py:322-397) — the canonical data-dependent-weights window that
     Window.rangeBetween cannot express."""
     fn = make_temporal_hp_fn(cfg.tlpf_cutoff_days, cfg.tlpf_pthr,
                              value_col, ts_col)
-    return keyed_apply(series, "url", n_buckets or cfg.salt_buckets,
-                       fn, THP_SCHEMA, detect_hot=False)
+    return keyed_apply(series, "url", fn, THP_SCHEMA, detect_hot=False)
 
 
 def mst_annotate(pairs: DataFrame, cfg: EngineConfig = DEFAULT,
-                 n_buckets: Optional[int] = None,
                  detect_hot: bool = True,
                  hot_keys: Optional[tuple] = None) -> DataFrame:
     """Annotate each observation with its key's MST membership
     (mst.py:146-170 boolean cube -> boolean column)."""
     fn = make_mst_fn()
-    return keyed_apply(pairs, "url", n_buckets or cfg.salt_buckets,
-                       fn, MST_SCHEMA, detect_hot, hot_keys)
+    return keyed_apply(pairs, "url", fn, MST_SCHEMA, detect_hot,
+                       hot_keys)

@@ -32,15 +32,19 @@ from pyrate_spark.kernels.vcm import get_vcmt
 
 def group_slices(pdf: pd.DataFrame, key: str = "url"):
     """(key, row-index array) per key via one argsort — cheaper than
-    pandas groupby for many keys per bucket."""
+    pandas groupby for many keys per partition. Null keys form one
+    group, yielded last with key None (SQL ``GROUP BY`` semantics)."""
     keys = pdf[key].to_numpy()
-    order = np.argsort(keys, kind="stable")
+    null = pd.isna(keys)
+    rows = np.flatnonzero(~null)
+    order = rows[np.argsort(keys[rows], kind="stable")]
     sorted_keys = keys[order]
-    boundaries = np.flatnonzero(
-        np.concatenate(([True], sorted_keys[1:] != sorted_keys[:-1])))
-    for i, start in enumerate(boundaries):
-        stop = boundaries[i + 1] if i + 1 < len(boundaries) else len(order)
+    starts = np.flatnonzero(np.concatenate(
+        ([len(order) > 0], sorted_keys[1:] != sorted_keys[:-1])))
+    for start, stop in zip(starts, np.append(starts[1:], len(order))):
         yield sorted_keys[start], order[start:stop]
+    if null.any():
+        yield None, np.flatnonzero(null)
 
 
 def ts_seconds(col: pd.Series) -> np.ndarray:
@@ -185,7 +189,7 @@ def _batched_repair(states, pthr):
     def _b0(i):
         # rebuilt per use (~0.06 ms) rather than held across rounds:
         # keeps the driver's memory bound at O(selected-row indices)
-        # per deficient key, independent of the bucket's url count
+        # per deficient key, independent of the partition's url count
         st = states[i]
         spans, ifirst, isecond = st[3], st[4], st[5]
         return design_matrix(np.asarray(ifirst), np.asarray(isecond),
@@ -290,15 +294,14 @@ def _inverted_slices(groups, first_all, second_all, phase_all,
 
 def _inverted_keys(pdf, method, pthr, smorder, smfactor, use_mst,
                    vcm_mode):
-    """Inversion inner loop SHARED by ``make_timeseries_fn``, the
-    fused ``make_timeseries_rates_fn`` and the Arrow list-form
-    ``make_timeseries_rates_arrow_fn`` (one body via
-    ``_inverted_slices``, so the paths cannot drift —
-    tests/test_fused_rates.py additionally pins fused == two-stage
-    bit-equality). Yields (url, dates, spans, tsincr, tscuml) per
-    key. The rank-repair — 65% of the stage at bench shape when run
-    per key — is hoisted into batched rounds (``_batched_repair``)
-    before the per-key solves."""
+    """Inversion inner loop of ``make_timeseries_fn`` over a pandas
+    frame; the fused Arrow list-form ``make_timeseries_rates_arrow_fn``
+    runs the same body (``_inverted_slices``), so the paths cannot
+    drift — tests/test_fused_rates.py additionally pins fused ==
+    two-stage bit-equality. Yields (url, dates, spans, tsincr, tscuml)
+    per key. The rank-repair — 65% of the stage at bench shape when
+    run per key — is hoisted into batched rounds
+    (``_batched_repair``) before the per-key solves."""
     first_all, second_all, phase_all, weight_all = _pair_arrays(pdf)
     mv_all = _maxvar_array(pdf)
     groups = list(group_slices(pdf))
@@ -311,7 +314,7 @@ def _inverted_keys(pdf, method, pthr, smorder, smfactor, use_mst,
 def make_timeseries_fn(method: int, pthr: int, smorder: int,
                        smfactor: float, use_mst: bool, vcm_mode: str):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # accumulate raw numpy chunks; ONE DataFrame per bucket at the
+        # accumulate raw numpy chunks; ONE DataFrame per frame at the
         # end (per-key pd.DataFrame + pd.concat was the dominant
         # allocation churn under 32 concurrent workers)
         urls, eids, etss, vels, incrs, cumls = [], [], [], [], [], []
@@ -349,36 +352,11 @@ def make_timeseries_fn(method: int, pthr: int, smorder: int,
     return fn
 
 
-def make_timeseries_rates_fn(method: int, pthr: int, smorder: int,
-                             smfactor: float, use_mst: bool,
-                             vcm_mode: str, err_scale: float):
-    """Fused pairs -> linear rates: the time-series inversion and the
-    cumulative-series regression in ONE grouped-map pass, so the
-    ~50x-larger per-epoch intermediate never crosses the Arrow/shuffle
-    boundary (pipeline fusion of timeseries_per_url +
-    linear_rate_per_url; reference runs them as separate steps,
-    timeseries.py:111-157 then 292-379).
-
-    Bit-exactness contract (tests/test_fused_rates.py): the inversion
-    inner loop IS make_timeseries_fn's (shared ``_inverted_keys``
-    since r5), and the cumulative series is quantized to float32
-    before the regression exactly as the TS_SCHEMA stage boundary
-    would."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        gen = _inverted_keys(pdf, method, pthr, smorder, smfactor,
-                             use_mst, vcm_mode)
-        urls, cols = _rates_columns(gen, err_scale)
-        if urls is None:
-            return pd.DataFrame(columns=["url", "rate", "intercept",
-                                         "rsquared", "error", "samples"])
-        return pd.DataFrame({"url": urls, **cols})
-    return fn
-
-
 def _rates_columns(gen, err_scale):
-    """Fused-rates epilogue shared by the pandas and Arrow forms:
-    consume the inversion generator, run the composition-invariant
+    """Fused-rates epilogue: consume the inversion generator (the
+    inversion of ``make_timeseries_fn``, with the cumulative series
+    quantized to float32 exactly as the TS_SCHEMA stage boundary of the
+    two-stage chain would), run the composition-invariant
     segment regression (linregress_segments: per-key sums never depend
     on which other keys share the frame), return (keys, columns)."""
     urls, ys, ts_axes = [], [], []
@@ -406,7 +384,8 @@ def make_timeseries_rates_arrow_fn(method: int, pthr: int, smorder: int,
     """Fused pairs -> rates over the GROUPED-LIST Arrow layout (r8):
     the JVM side aggregates each key to ONE row
     ``(url, sort_array(collect_list(struct(t1, t2, dv[, w][, mv]))))``
-    — reusing the pair network's url clustering, so no exchange — and
+    — over the keyed layout, which already clusters by url, so the
+    aggregation adds no exchange — and
     this ``mapInArrow`` body unwraps the list column zero-copy (list
     offsets -> per-key slices over the flat struct children, the
     encode_tier pattern). The boundary then carries each url string
@@ -417,9 +396,9 @@ def make_timeseries_rates_arrow_fn(method: int, pthr: int, smorder: int,
     (t1, t2) — (t1, t2) is unique per key by the pair-network
     contract, so this is exactly the kernel's lexsort order, and
     ``_prep_key`` re-sorts anyway (a stable no-op here). The inversion
-    body and regression epilogue are the SAME ``_inverted_slices`` /
-    ``_rates_columns`` the pandas form uses; equality is pinned by
-    tests/test_fused_rates.py's arrow-vs-bucketed case."""
+    body is the SAME ``_inverted_slices`` the two-stage
+    ``make_timeseries_fn`` uses; equality with the two-stage chain is
+    pinned by tests/test_fused_rates.py."""
 
     def fn(batches):
         import pyarrow as pa
@@ -459,7 +438,7 @@ def make_timeseries_rates_arrow_fn(method: int, pthr: int, smorder: int,
             if keys is None:
                 continue
             # from_pandas=True: NaN -> SQL NULL, exactly what the
-            # pandas-DataFrame return path has always produced
+            # pandas-DataFrame kernels' return path produces
             yield pa.RecordBatch.from_arrays(
                 [urls_arr.take(pa.array(keys, pa.int32())),
                  pa.array(cols["rate"], pa.float64(), from_pandas=True),

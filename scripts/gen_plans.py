@@ -72,21 +72,25 @@ add("Pair network (via='range_join', duplicate-keyed fallback)",
     network_pairs(series, 2, 3, via="range_join"))
 
 add("Per-url inversion (grouped-map kernel)",
-    "salt -> explicit repartition(_bucket) -> ArrowEvalPython/FlatMapGroupsInPandas. "
-    "The repartition is user-specified so AQE cannot coalesce the "
+    "One keyed layout: explicit repartition(n, url) -> MapInPandas (no "
+    "exchange at all over a persisted url-clustered input); hot keys "
+    "would add one exchange over the hot subset only, one key per "
+    "partition. The "
+    "repartition count is user-specified so AQE cannot coalesce the "
     "compute-heavy Python stage below the cluster's parallelism.",
     timeseries_per_url(network_pairs(series, 2, 3),
-                       EngineConfig(salt_buckets=64), use_mst=False,
+                       EngineConfig(), use_mst=False,
                        detect_hot=False))
 
 from pyrate_spark.operators.grouped import linear_rate_from_pairs
 add("Fused pairs -> linear rates (r4 pipeline fusion)",
-    "Both inversion stages in ONE FlatMapGroupsInPandas: the per-epoch "
-    "intermediate (the two-stage chain's largest shuffle) never appears "
-    "in the plan — one salt, one user repartition, one Python stage. "
+    "Both inversion stages in ONE MapInArrow over the grouped-list Arrow "
+    "boundary: the per-epoch intermediate (the two-stage chain's largest "
+    "shuffle) never appears in the plan — one user repartition, whose "
+    "url clustering the list aggregation reuses, one Python stage. "
     "Bit-exact vs the two-stage chain (tests/test_fused_rates.py).",
     linear_rate_from_pairs(network_pairs(series, 2, 3),
-                           EngineConfig(salt_buckets=64), use_mst=False,
+                           EngineConfig(), use_mst=False,
                            detect_hot=False))
 
 add("Gap-filled grid (T17)",
@@ -127,16 +131,16 @@ add("Multi-table LSH ANN (signature equi-join + rerank)",
 from pyrate_spark.operators.corrections import closure_fixpoint, maxvar_full
 add("Closure fixpoint (G6, grouped-map)",
     "The iterate-until-stable loop runs INSIDE the kernel (per-key graph "
-    "work): one salt + one user repartition + one FlatMapGroupsInPandas, "
+    "work): one user repartition + one MapInPandas, "
     "regardless of how many iterations each key needs.",
     closure_fixpoint(network_pairs(series, 2, 3),
-                     EngineConfig(salt_buckets=16)))
+                     EngineConfig()))
 
 add("FFT maxvar (A11, grouped-map)",
     "Per-key regular-grid autocovariance: same single-exchange grouped-map "
     "shape; output is one row per key (tiny), safe to broadcast-join back "
     "onto pairs for vcm_mode='maxvar'.",
-    maxvar_full(series, EngineConfig(salt_buckets=16), calc_alpha=False))
+    maxvar_full(series, EngineConfig(), calc_alpha=False))
 
 add("Embedding-cosine near-dup (brute baseline)",
     "JVM-side zip_with/aggregate dot products; no Python in the loop. "
@@ -161,7 +165,7 @@ add("Cohort spectral low-pass (T12, FFT grouped-map)",
     "grouped-map whose per-group state is a single time-grid array "
     "(calendar-bounded, not row-bounded); the filtered grid joins back "
     "onto rows where AQE broadcasts the small side.",
-    cohort_lowpass_fft(series, EngineConfig(salt_buckets=4),
+    cohort_lowpass_fft(series, EngineConfig(),
                        cohort_expr=F.col("lang")))
 
 from pyrate_spark.operators.lookup import (lookup_join,

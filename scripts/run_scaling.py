@@ -70,8 +70,7 @@ rel_rows = rel.count()
 pairs = network_pairs(series, 3, 2).persist()
 pair_rows = pairs.count()
 rel_pairs = network_pairs(rel, 3, 2).count()   # denominator, untimed
-cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1,
-                   salt_buckets=1024)
+cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1)
 
 def median_time(fn):
     walls = []

@@ -88,7 +88,6 @@ demo_urls: 12
 demo_epochs: 10
 demo_seed: 3
 tiers: 1 hour, 1 day
-salt_buckets: 4
 """))
     res = run_workflow(spark, rc)
     assert all(not res[s].get("skipped") for s in STEPS)
@@ -122,7 +121,6 @@ demo_urls: 12
 demo_epochs: 10
 demo_seed: 3
 tiers: 1 hour
-salt_buckets: 4
 """))
     res3 = step_ingest(spark, rc2)
     assert not res3.get("skipped")
@@ -140,7 +138,6 @@ demo_urls: 8
 demo_epochs: 10
 demo_seed: 5
 closure: {flag}
-salt_buckets: 4
 """))
         for step in ("ingest", "prepifg", "correct"):
             from pyrate_spark.cli import STEP_FNS
@@ -221,7 +218,6 @@ demo_urls: 8
 demo_epochs: 8
 demo_seed: 11
 tiers: 1 hour
-salt_buckets: 2
 parallelism: 2
 shuffle_partitions: 4
 """)

@@ -4,8 +4,8 @@ composition-invariant kernels.
 clustered_by_key must say True exactly when the physical partitioning
 guarantees every key's rows share a partition; keyed_apply then runs
 the kernel as MapInPandas with zero new exchanges. Any doubt (renames,
-round-robin repartition, raw reads, a different key) must fall back to
-the explicit salted-bucket exchange.
+round-robin repartition, raw reads, a different key) must say False,
+so the keyed layout adds its own explicit url repartition.
 """
 
 from __future__ import annotations
@@ -31,8 +31,8 @@ class TestClusteredByKey:
     def test_false_on_unpersisted_window_output(self, spark, series):
         # clustered, but NOT persisted: AQE may re-coalesce the
         # exchange per query (measured 32 -> 1 partitions on a
-        # small-byte pair window), so the shuffle-free path must
-        # decline and keep the explicit coalesce-exempt repartition
+        # small-byte pair window), so the shuffle-free layout must
+        # decline and take the explicit coalesce-exempt repartition
         p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
         assert clustered_by_key(p, "url") is False
 
@@ -75,11 +75,6 @@ class TestClusteredByKey:
     def test_false_for_other_name(self, spark, series):
         p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
         assert clustered_by_key(p, "ts_first") is False
-
-    def test_env_kill_switch(self, spark, series, monkeypatch):
-        p = network_pairs(series, max_span_days=3, max_pairs_per_epoch=2)
-        monkeypatch.setenv("PYRATE_NO_CLUSTER_REUSE", "1")
-        assert clustered_by_key(p, "url") is False
 
 
 class TestSegmentRegressionInvariance:

@@ -28,7 +28,7 @@ def test_defaults_valid_and_hash_stable():
     ({"ifg_drop_thr": 1.5}, "less than or equal to 1.0"),
     ({"min_loops_per_ifg": -1}, "greater than or equal to 0"),
     ({"ts_pthr": 2000}, "less than or equal to 1000"),
-    ({"salt_buckets": 0}, "greater than or equal to 1"),
+    ({"max_pairs_per_epoch": 0}, "greater than or equal to 1"),
     ({"tiers": ()}, "non-empty tuple"),
 ])
 def test_out_of_range_rejected(kw, msg):

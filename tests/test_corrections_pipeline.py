@@ -18,7 +18,7 @@ from pyrate_spark.operators.tiersink import decode_tier, encode_tier
 from pyrate_spark.plans.pipeline import run_correct, validate_order
 
 BASE = dt.datetime(2024, 1, 1)
-CFG = EngineConfig(salt_buckets=8, tlpf_cutoff_days=7, tlpf_pthr=1)
+CFG = EngineConfig(tlpf_cutoff_days=7, tlpf_pthr=1)
 
 
 def _series(spark, vals):
@@ -87,7 +87,7 @@ def test_closure_mask(spark):
         tri("ok", False) + tri("bad", True),
         "url string, ts_first timestamp, ts_second timestamp, "
         "delta_value double, time_span double, nan_fraction double")
-    cfg = EngineConfig(salt_buckets=4, max_loop_length=3,
+    cfg = EngineConfig(max_loop_length=3,
                        closure_thr=0.5)
     out = closure_mask(pairs, cfg).toPandas()
     ok = out[out.url == "ok"]
@@ -117,7 +117,7 @@ def _fixpoint_net(spark):
 
 def test_closure_fixpoint_drop_sequence(spark):
     pairs, t = _fixpoint_net(spark)
-    cfg = EngineConfig(salt_buckets=4, max_loop_length=3,
+    cfg = EngineConfig(max_loop_length=3,
                        max_loop_redundancy=10, closure_thr=0.5,
                        min_loops_per_ifg=0, ifg_drop_thr=0.5)
     out = closure_fixpoint(pairs, cfg).toPandas()
@@ -134,7 +134,7 @@ def test_closure_fixpoint_min_loops_gate(spark):
     # min_loops_per_ifg=2: no edge participates in >2 loops, so gate 1
     # never fires and the full list is stable at iteration 1
     pairs, _ = _fixpoint_net(spark)
-    cfg = EngineConfig(salt_buckets=4, max_loop_length=3,
+    cfg = EngineConfig(max_loop_length=3,
                        max_loop_redundancy=10, closure_thr=0.5,
                        min_loops_per_ifg=2, ifg_drop_thr=0.5)
     out = closure_fixpoint(pairs, cfg).toPandas()
@@ -150,7 +150,7 @@ def test_closure_fixpoint_no_loops_aborts_intact(spark):
     pairs = spark.createDataFrame(
         rows, "url string, ts_first timestamp, ts_second timestamp, "
         "delta_value double, time_span double, nan_fraction double")
-    out = closure_fixpoint(pairs, EngineConfig(salt_buckets=4)).toPandas()
+    out = closure_fixpoint(pairs, EngineConfig()).toPandas()
     assert len(out) == 2
     assert (out["n_loops"] == 0).all() and (out["n_iter"] == 1).all()
 
@@ -265,7 +265,7 @@ def test_orbital_network_overdetermined(spark):
     pairs = spark.createDataFrame(
         rows, "url string, ts_first timestamp, ts_second timestamp, "
         "delta_value double, time_span double, nan_fraction double")
-    out = (orbital_network(pairs, EngineConfig(salt_buckets=4),
+    out = (orbital_network(pairs, EngineConfig(),
                            use_mst=False)
            .toPandas().sort_values(["ts_first", "ts_second"])
            .reset_index(drop=True))

@@ -114,7 +114,7 @@ class TestMaxvarVCMWiring:
             "delta_value double, time_span double, nan_fraction double, "
             "maxvar double")
         cfg = EngineConfig(nsig=10 ** 9, pthr=1, velerror_nsig=1,
-                           salt_buckets=4, vcm_mode="maxvar")
+                           vcm_mode="maxvar")
         got = stack_rate_per_url(pairs, cfg, use_mst=False).first()
         fs = np.array([(x - base).total_seconds() for x in t[:4]])
         ss = np.array([(x - base).total_seconds() for x in t[1:]])
@@ -247,7 +247,7 @@ class TestPerRowMaxvarVCM:
             "delta_value double, time_span double, nan_fraction double, "
             "maxvar double")
         cfg = EngineConfig(nsig=10 ** 9, pthr=1, velerror_nsig=1,
-                           salt_buckets=4, vcm_mode="maxvar")
+                           vcm_mode="maxvar")
         got = stack_rate_per_url(pairs, cfg, use_mst=False).first()
         fs = np.array([(x - base).total_seconds() for x in t[:4]])
         ss = np.array([(x - base).total_seconds() for x in t[1:]])

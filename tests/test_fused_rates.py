@@ -33,8 +33,7 @@ def pairs(spark):
 @pytest.mark.parametrize("method,use_mst", [(2, False), (1, False),
                                             (2, True)])
 def test_fused_equals_two_stage_bit_exact(spark, pairs, method, use_mst):
-    cfg = EngineConfig(ts_method=method, ts_pthr=0, velerror_nsig=2,
-                       salt_buckets=16)
+    cfg = EngineConfig(ts_method=method, ts_pthr=0, velerror_nsig=2)
     two = _rates_pd(linear_rate_per_url(
         timeseries_per_url(pairs, cfg, use_mst=use_mst), cfg))
     fused = _rates_pd(linear_rate_from_pairs(pairs, cfg,
@@ -49,26 +48,28 @@ def test_fused_equals_two_stage_bit_exact(spark, pairs, method, use_mst):
 
 
 def test_fused_never_plans_more_exchanges(spark, pairs):
-    cfg = EngineConfig(ts_method=2, ts_pthr=0, salt_buckets=16)
+    cfg = EngineConfig(ts_method=2, ts_pthr=0)
     two = linear_rate_per_url(timeseries_per_url(pairs, cfg,
                                                  use_mst=False), cfg)
     fused = linear_rate_from_pairs(pairs, cfg, use_mst=False)
     # r8: BOTH paths now reuse the persisted pair network's url
     # clustering, so fusion can no longer strictly halve the exchange
-    # count — but it must never plan more, and the fused cold side
-    # ships via the grouped-list Arrow boundary (MapInArrow over a
-    # zero-exchange url aggregation), with at most ONE new exchange
-    # (the tiny hot-key groupBy) on top of the input's own
-    # (exchange_count also sees exchanges INSIDE the cached plan).
+    # count — but it must never plan more, and BOTH fused branches (cold
+    # and hot keys) ship via ONE grouped-list Arrow boundary (MapInArrow
+    # over the union of their zero-exchange url aggregations), with at
+    # most ONE new exchange (the tiny hot-key spread) on top of the
+    # input's own (exchange_count also sees exchanges INSIDE the cached
+    # plan).
     assert exchange_count(fused) <= exchange_count(two)
     plan = fused._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1
+    assert "FlatMapGroupsInPandas" not in plan
 
     # DISTINCT exchanges (the raw count renders the cached plan's own
     # exchanges once per union branch): the fused hybrid may add only
-    # ONE beyond the input's — the deliberate tiny range exchange that
+    # ONE beyond the input's — the deliberate tiny exchange that
     # spreads hot keys one-per-partition (_spread_hot; hash placement
-    # measured 3 O(epochs^3) keys into one partition). The cold
+    # by url measured 3 O(epochs^3) keys into one partition). The cold
     # url-aggregation reuses the cache's hash(url) clustering.
     import re
 
@@ -81,15 +82,19 @@ def test_fused_never_plans_more_exchanges(spark, pairs):
         distinct_exchanges(pairs)) + 1
 
 
-def test_fused_unclustered_input_keeps_bucketed_path(spark, pairs):
+def test_fused_unclustered_input_takes_single_plan(spark, pairs):
     """An input whose partitioning does NOT cluster by url (round-robin
-    repartition) must fall back to the salted-bucket exchange — the
-    shuffle-free path would silently split keys across frames."""
-    cfg = EngineConfig(ts_method=2, ts_pthr=0, salt_buckets=16)
+    repartition) gets the one keyed layout's own url repartition — no
+    salting join, no bucket column — and both branches still cross the
+    one grouped-list Arrow boundary."""
+    cfg = EngineConfig(ts_method=2, ts_pthr=0)
     scrambled = pairs.repartition(7)
     fused = linear_rate_from_pairs(scrambled, cfg, use_mst=False)
     plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("FlatMapGroupsInPandas") == 1
+    assert "BroadcastExchange" not in plan
+    assert "_bucket" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "Union" in plan and plan.count("MapInArrow") == 1
     # and the results are bit-identical to the clustered path
     a = _rates_pd(fused)
     b = _rates_pd(linear_rate_from_pairs(pairs, cfg, use_mst=False))

@@ -23,8 +23,7 @@ from pyrate_spark.operators.grouped import (linear_rate_per_url,
                                             mask_rate_df, mst_annotate,
                                             stack_rate_per_url,
                                             temporal_highpass_per_url,
-                                            timeseries_per_url,
-                                            salted_buckets)
+                                            timeseries_per_url)
 from pyrate_spark.operators.pairs import (epoch_ids, network_pairs,
                                           sequential_pairs)
 
@@ -240,20 +239,42 @@ class TestTemporalHighpass:
         np.testing.assert_allclose(out["value_lp"].to_numpy(), 7.0)
 
 
-class TestSaltedBuckets:
+class TestHotKeySpread:
     def test_hot_key_isolated(self, spark):
-        rows = [("hot", float(i)) for i in range(500)] + \
+        """keyed_apply detects the hot keys and _spread_hot gives each
+        one an output partition of its own, shared with no other key."""
+        from pyrate_spark.operators.grouped import keyed_apply
+        sizes = {"hot0": 300, "hot1": 500, "hot2": 900}   # unequal
+        hot = tuple(sizes)
+        rows = [(h, float(i)) for h, n in sizes.items()
+                for i in range(n)] + \
                [(f"u{i}", float(i)) for i in range(50)]
         df = spark.createDataFrame(rows, "url string, v double")
-        out = salted_buckets(df, "url", n_buckets=8, hot_factor=5.0)
-        pdf = out.toPandas()
-        hot_buckets = set(pdf[pdf.url == "hot"]["_bucket"])
-        cold_buckets = set(pdf[pdf.url != "hot"]["_bucket"])
-        assert len(hot_buckets) == 1
-        b = hot_buckets.pop()
-        assert b >= 8                  # dedicated bucket id
-        assert b not in cold_buckets
-        assert max(cold_buckets) < 8
+
+        def fn(pdf):
+            from pyrate_spark.operators.udf_kernels import group_slices
+            return pd.DataFrame(
+                [(k, len(idx)) for k, idx in group_slices(pdf)],
+                columns=["url", "n"])
+
+        out = (keyed_apply(df, "url", fn, "url string, n long")
+               .withColumn("pid", F.spark_partition_id()).toPandas())
+        assert sorted(out["url"]) == sorted(set(r[0] for r in rows))
+        assert {r.url: r.n for r in out[out.url.isin(hot)].itertuples()} \
+            == sizes
+        for h in hot:
+            pid = out[out.url == h]["pid"]
+            assert len(pid) == 1
+            assert (out["pid"] == pid.iloc[0]).sum() == 1, out
+
+    def test_salt_hash_is_spark_hash(self, spark):
+        """The driver-side hash that picks the hot-key salts is exactly
+        Spark's ``hash()`` of a bigint, the one HashPartitioning uses."""
+        from pyrate_spark.operators.grouped import _spark_hash_long
+        ids = list(range(3000)) + [2 ** 31 - 1]
+        got = [r[0] for r in spark.createDataFrame(
+            [(i,) for i in ids], "id long").select(F.hash("id")).collect()]
+        assert got == [_spark_hash_long(i) for i in ids]
 
 
 def test_pair_lookup_broadcast_join(spark):

@@ -147,7 +147,7 @@ class TestClosurePlot:
         from pyrate_spark.config import EngineConfig
         from pyrate_spark.operators.corrections import closure_sums
         cfg = EngineConfig(max_loop_length=4,
-                           max_loop_redundancy=10 ** 6, salt_buckets=4)
+                           max_loop_redundancy=10 ** 6)
         return closure_sums(pairs, cfg).persist()
 
     def test_closure_sums_hand_network(self, sums):

@@ -31,7 +31,7 @@ spark = get_session("eq", parallelism=cpus, shuffle_partitions=cpus)
 series = extract_series(generate_pages(
     spark, n_urls=80, epochs_per_url=24, null_pct=15, seed=11)).persist()
 pairs = network_pairs(series, 4, 3).persist()
-cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1, salt_buckets=32)
+cfg = EngineConfig(ts_method=2, ts_pthr=0, velerror_nsig=1)
 tier_rollup(series, "1 hour", 0.5).write.parquet(out + "/rollup")
 timeseries_per_url(pairs, cfg, use_mst=True).write.parquet(out + "/ts")
 stack_rate_per_url(pairs, cfg, use_mst=True).write.parquet(out + "/stack")

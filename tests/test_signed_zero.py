@@ -45,7 +45,7 @@ class TestClosureFoldOrder:
         from pyrate_spark.config import EngineConfig
         from pyrate_spark.operators.corrections import closure_sums
         cfg = EngineConfig(max_loop_length=3,
-                           max_loop_redundancy=10 ** 6, salt_buckets=4)
+                           max_loop_redundancy=10 ** 6)
         out = closure_sums(pairs, cfg).toPandas()
         assert len(out) == 1
         assert out["closure"].iloc[0] == (ab + bc) - ac  # == 0.0, not 1.0
@@ -66,7 +66,7 @@ class TestClosureFoldOrder:
         from pyrate_spark.operators.corrections import closure_sums
         import __spark_entry__ as entrymod
         cfg = EngineConfig(max_loop_length=3,
-                           max_loop_redundancy=10 ** 6, salt_buckets=4)
+                           max_loop_redundancy=10 ** 6)
         s = closure_sums(pairs, cfg).select(
             entrymod._duck_round5("closure").alias("closure"))
         v = s.toPandas()["closure"].to_numpy()

@@ -411,7 +411,7 @@ def test_foreachbatch_corrections_equals_batch(spark, tmp_path):
     from pyrate_spark.config import EngineConfig
     import numpy as np
 
-    cfg = EngineConfig(salt_buckets=4)
+    cfg = EngineConfig()
     src = str(tmp_path / "ssrc")
     out = str(tmp_path / "sout")
     ckpt = str(tmp_path / "sckpt")

@@ -30,7 +30,7 @@ series = extract_series(generate_pages(spark, n_urls=30,
 hourly = tier_rollup(series, "1 hour", thresh=0.5)
 # the grouped-map sink forces executor-side python workers to import
 # the kernels from the distributed zip, not from any local checkout
-enc = encode_tier(hourly, "1 hour", cfg=EngineConfig(salt_buckets=4))
+enc = encode_tier(hourly, "1 hour", cfg=EngineConfig())
 n = decode_tier(enc).count()
 print(f"SUBMIT_OK rows={n}")
 spark.stop()

@@ -77,15 +77,15 @@ def test_gapfill_single_exchange(spark):
 
 
 def test_grouped_kernel_single_user_repartition(spark):
-    """The grouped-map path shuffles ONCE (the user repartition on
-    _bucket); the groupBy reuses that clustering."""
+    """The grouped-map path shuffles ONCE: the keyed layout's user
+    repartition on url, which the kernel's mapInPandas runs over."""
     from pyrate_spark.operators.grouped import timeseries_per_url
     from pyrate_spark.operators.pairs import sequential_pairs
     from pyrate_spark.config import EngineConfig
     s = extract_series(generate_pages(spark, n_urls=30, epochs_per_url=10,
                                       seed=3))
     p = sequential_pairs(s).localCheckpoint()
-    ts = timeseries_per_url(p, EngineConfig(salt_buckets=16),
+    ts = timeseries_per_url(p, EngineConfig(),
                             use_mst=False, detect_hot=False)
     assert exchange_count(ts) == 1
 
@@ -167,14 +167,14 @@ def test_cohort_lowpass_fft_joinback_broadcasts(spark):
     from pyrate_spark.operators.corrections import cohort_lowpass_fft
     s = extract_series(generate_pages(spark, n_urls=60, epochs_per_url=24,
                                       seed=11))
-    out = cohort_lowpass_fft(s, bucket_seconds=3600, cutoff_days=0.2,
-                             n_buckets=4)
+    out = cohort_lowpass_fft(s, bucket_seconds=3600, cutoff_days=0.2)
     out.count()  # materialize so AQE finalizes the join strategy
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan[:2000]
     assert "SortMergeJoin" not in plan
-    # the applyInPandas stage runs over the explicit _bucket repartition
-    assert "FlatMapGroupsInPandas" in plan
+    # the Python stage runs over the explicit _cohort repartition
+    assert "MapInPandas" in plan
+    assert "Exchange hashpartitioning(_cohort#" in plan, plan[:2000]
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
 
 
