@@ -48,6 +48,7 @@ from pyrate_spark.config import EngineConfig, DEFAULT
 from pyrate_spark.operators.udf_kernels import (
     make_linear_rate_fn, make_mst_fn, make_stack_fn, make_temporal_hp_fn,
     make_timeseries_fn, make_timeseries_rates_arrow_fn)
+from pyrate_spark.operators.worker_setup import warm_worker
 
 
 # --------------------------------------------------------------------------
@@ -256,12 +257,14 @@ def keyed_apply(df: DataFrame, key: str, fn, schema,
 
 def warm_python_workers(spark, n: Optional[int] = None) -> None:
     """Spin up the python worker pool with a no-op Arrow pass so the
-    first real grouped-map stage doesn't pay the worker-spawn storm.
+    first real grouped-map stage doesn't pay the worker-spawn storm,
+    and run the per-worker setup (:func:`~pyrate_spark.operators.
+    worker_setup.warm_worker`, from a pyspark-free module) in each.
     On a long-lived cluster this is a non-event; in benchmarks it
     separates steady-state throughput from process startup."""
     parts = n or int(spark.conf.get("spark.sql.shuffle.partitions")) * 2
     (spark.range(parts).repartition(parts, "id").groupBy("id")
-     .applyInPandas(lambda p: p, "id long").count())
+     .applyInPandas(warm_worker, "id long").count())
 
 
 # --------------------------------------------------------------------------

@@ -213,8 +213,10 @@ def rate_grid(per_key: DataFrame, key_col: str = "url",
     ``row_number().over(Window.orderBy(key))`` shuffled every row to
     ONE task; here each task ranks only its own key range, and the
     offset side is one tiny driver aggregate (#partitions rows).
-    Determinism: the offsets are derived from the same deterministic
-    range partitioning that the returned plan re-executes, and
+    Determinism: the range-partitioned frame is local-checkpointed, so
+    the offsets and every execution of the returned plan read ONE
+    partitioning (range bounds are re-sampled per execution; unpinned,
+    5000 keys from 16 files rendered off-by-one rasters or raised), and
     ``quicklook_sink`` fails loudly on any out-of-bounds coordinate.
 
     ``max_pixels`` bounds the raster explicitly — the function (not
@@ -226,8 +228,10 @@ def rate_grid(per_key: DataFrame, key_col: str = "url",
     spark = per_key.sparkSession
     n_parts = partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    # the range bounds' sample is seeded by the RDD id: pin one draw
     ranged = (per_key.repartitionByRange(n_parts, F.col(key_col))
-              .withColumn("_pid", F.spark_partition_id()))
+              .withColumn("_pid", F.spark_partition_id())
+              .localCheckpoint(eager=False))
     counts = {r["_pid"]: r["count"]
               for r in ranged.groupBy("_pid").count().collect()}
     total = sum(counts.values())

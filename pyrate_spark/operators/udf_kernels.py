@@ -8,6 +8,13 @@ workers on local[32] vs 0.8 s warm). This module's import closure is
 numpy + pandas + pyrate_spark.kernels only, which the Arrow worker
 runtime has effectively already loaded.
 
+Importing it also installs :func:`~pyrate_spark.operators.worker_setup.
+lazy_zip_invalidation` in the worker: pyspark re-runs
+``importlib.invalidate_caches()`` before every task, which on Python
+< 3.13 re-parses the whole ``pyspark.zip`` directory once per
+zipimporter (~160 ms per task on 4 cores, more than most kernels
+here); with it installed an unchanged archive is never re-read.
+
 Each ``make_*`` factory binds config scalars into a closure and returns
 the pandas-DataFrame -> pandas-DataFrame function for applyInPandas.
 Determinism: every kernel sorts a key's rows by (ts_first, ts_second)
@@ -28,6 +35,9 @@ from pyrate_spark.kernels.stack import stack_rate_pixel
 from pyrate_spark.kernels.tempfilter import temporal_high_pass
 from pyrate_spark.kernels.timeseries import time_series_pixel
 from pyrate_spark.kernels.vcm import get_vcmt
+from pyrate_spark.operators.worker_setup import lazy_zip_invalidation
+
+lazy_zip_invalidation()
 
 
 def group_slices(pdf: pd.DataFrame, key: str = "url"):

@@ -48,7 +48,7 @@ def surviving(df: DataFrame, keep_days: int | None, now_ts: dt.datetime,
 
 
 def _rewrite_partition(spark: SparkSession, part_dir: str, tmp_dir: str,
-                       n_out: int, schema=None) -> None:
+                       n_out: int) -> None:
     """Rewrite one partition's files into ``n_out`` files at a sibling
     tmp path (module-level so tests can wrap it to simulate a racing
     append landing mid-rewrite).
@@ -61,15 +61,12 @@ def _rewrite_partition(spark: SparkSession, part_dir: str, tmp_dir: str,
     even as the input split packing, which is all a small-file
     compactor needs; row content is identical either way.
 
-    ``schema`` (r8): per-day schema inference launches its own
-    footer-reading Spark job per rewrite; the sweep infers once from
-    the first candidate and threads it through — the per-day jobs
-    then submit without an inference round-trip."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    (reader.parquet(part_dir).coalesce(n_out)
-     .write.mode("overwrite").parquet(tmp_dir))
+    The schema is the partition's own, merged over every file's
+    footer: days of one store may carry different columns (a column
+    added mid-stream), and a schema taken from another day or from one
+    file would drop the others' columns silently."""
+    (spark.read.option("mergeSchema", "true").parquet(part_dir)
+     .coalesce(n_out).write.mode("overwrite").parquet(tmp_dir))
 
 
 def compact_day_store(spark: SparkSession, path: str,
@@ -147,13 +144,6 @@ def compact_day_store(spark: SparkSession, path: str,
             continue
         candidates.append((day, name, st.getPath(), files))
 
-    shared_schema = None
-    if candidates:
-        # one schema inference for the whole sweep (see
-        # _rewrite_partition): day partitions of one store share it
-        shared_schema = spark.read.parquet(
-            f"{path}/{candidates[0][1]}").schema
-
     def compact_one(cand):
         day, name, live_path, files = cand
         snapshot = {f.getPath().getName() for f in files}
@@ -162,8 +152,7 @@ def compact_day_store(spark: SparkSession, path: str,
         part_dir = f"{path}/{name}"
         tmp_dir = f"{path}/.compact_tmp_{name}"
         old_dir = f"{path}/.compact_old_{name}"
-        _rewrite_partition(spark, part_dir, tmp_dir, n_out,
-                           schema=shared_schema)
+        _rewrite_partition(spark, part_dir, tmp_dir, n_out)
         # A file appended between the read snapshot and the swap would
         # be lost by the rewrite — abort this day rather than drop it.
         now_names = {f.getPath().getName() for f in _data_files(live_path)}

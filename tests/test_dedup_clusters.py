@@ -97,3 +97,19 @@ def test_pair_source_agnostic(spark):
     got = {r.doc_id: r.cluster_id
            for r in near_dup_clusters(pairs, docs=docs).collect()}
     assert got == {7: 7, 8: 7, 9: 9}
+
+
+@pytest.mark.parametrize("id_type", ["double", "decimal(10,1)"])
+def test_fractional_ids_do_not_stop_early(spark, id_type):
+    """The decimal(38,0) label-sum witness is exact only for integral
+    ids: on the path 1.1-1.4-1.3-1.2, round 1 lowers 1.3's label from
+    1.2 to 1.1 while every label still rounds to 1, so a sum witness
+    stops with 1.2 labelled 1.2. Fractional ids take the join probe."""
+    ids = [1.1, 1.4, 1.3, 1.2]
+    pairs = spark.createDataFrame(
+        [(str(a), str(b)) for a, b in zip(ids, ids[1:])],
+        "doc_a string, doc_b string").selectExpr(
+        f"cast(doc_a as {id_type}) doc_a", f"cast(doc_b as {id_type}) doc_b")
+    got = {float(r.doc_id): float(r.cluster_id)
+           for r in near_dup_clusters(pairs).collect()}
+    assert got == {i: 1.1 for i in ids}

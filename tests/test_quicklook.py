@@ -217,3 +217,26 @@ class TestClosurePlot:
         assert meta["n_loops_total"] == 3
         assert meta["n_loops_plotted"] == 2
         assert meta["truncated"]
+
+
+def test_rate_grid_sink_stable_at_5000_keys(spark, tmp_path):
+    """The raster size and the coordinates come from one execution of
+    rate_grid's range partitioning: 5000 keys read back from 16 files
+    (enough rows per input split that the range bounds are sampled)
+    render 8 times without an out-of-bounds raise, each key on its
+    sorted row-major pixel."""
+    src = str(tmp_path / "rates")
+    (spark.range(5000)
+     .select(F.format_string("https://host%04d.example/p/%05d",
+                             F.col("id") % 10, F.col("id")).alias("url"),
+             F.rand(7).alias("rate"))
+     .repartition(16).write.parquet(src))
+    rates = spark.read.parquet(src)
+    for i in range(8):
+        meta = quicklook_sink(rate_grid(rates), str(tmp_path / f"q{i}"),
+                              "rate")
+        assert (meta["n_pixels"], meta["height"], meta["width"]) \
+            == (5000, 313, 16)
+    grid = rate_grid(rates)
+    got = sorted((r["url"], r["y"] * 16 + r["x"]) for r in grid.collect())
+    assert [p for _, p in got] == list(range(5000))

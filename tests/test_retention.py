@@ -166,3 +166,39 @@ def test_compact_day_store_crash_leftover_recovery(spark, tmp_path):
     assert spark.read.parquet(path).count() == 8 * 4
     assert not any(p.name.startswith(".compact_")
                    for p in pathlib.Path(path).iterdir())
+
+
+def test_compact_day_store_keeps_each_days_columns(spark, tmp_path):
+    """Compaction reads every day with that day's own schema: a column
+    that only some days (or only some files of a day) carry survives
+    the rewrite, with its values."""
+    from pyrate_spark.plans.retention import compact_day_store
+    path = str(tmp_path / "store")
+    base = dt.datetime(2024, 3, 1)
+    for k in range(8):
+        day1 = spark.createDataFrame(
+            [("u%d" % i, base + dt.timedelta(hours=k), float(i), float(k))
+             for i in range(3)],
+            "url string, warc_ts timestamp, value double, a double")
+        write_raw_store(day1, path, mode="append")
+        rows2 = [("u%d" % i, base + dt.timedelta(days=1, hours=k), float(i))
+                 for i in range(3)]
+        if k < 4:
+            day2 = spark.createDataFrame(
+                rows2, "url string, warc_ts timestamp, value double")
+        else:
+            day2 = spark.createDataFrame(
+                [r + (f"b{k}",) for r in rows2],
+                "url string, warc_ts timestamp, value double, b string")
+        write_raw_store(day2, path, mode="append")
+
+    res = compact_day_store(spark, path, max_files_per_day=4,
+                            min_age_days=None)
+    assert set(res["compacted"]) == {"2024-03-01", "2024-03-02"}
+    d1 = spark.read.parquet(f"{path}/_day=2024-03-01")
+    d2 = spark.read.parquet(f"{path}/_day=2024-03-02")
+    assert "a" in d1.columns and "b" in d2.columns
+    assert sorted(r.a for r in d1.collect()) == sorted(
+        float(k) for k in range(8) for _ in range(3))
+    assert sorted((r.b or "") for r in d2.collect()) == sorted(
+        [""] * 12 + [f"b{k}" for k in range(4, 8) for _ in range(3)])

@@ -2,7 +2,8 @@
 spark-submit --py-files on multi-executor clusters"): package the
 engine into a zip, submit a job from a clean cwd with no repo on the
 python path, and prove both driver-side import and executor-side
-(python worker) import resolve from the zip alone.
+(python worker) import resolve from the zip alone — the warmed
+workers' per-worker setup included.
 """
 
 import os
@@ -32,6 +33,27 @@ hourly = tier_rollup(series, "1 hour", thresh=0.5)
 # the kernels from the distributed zip, not from any local checkout
 enc = encode_tier(hourly, "1 hour", cfg=EngineConfig())
 n = decode_tier(enc).count()
+
+# the warmed workers import their setup from the zip, and run with it
+from pyrate_spark.operators.grouped import warm_python_workers
+warm_python_workers(spark)
+
+def report(batches):
+    import zipimport
+    import pandas as pd
+    for _ in batches:
+        pass
+    m = sys.modules.get("pyrate_spark.operators.worker_setup")
+    yield pd.DataFrame({
+        "installer": [zipimport.zipimporter.invalidate_caches.__module__],
+        "src": [getattr(m, "__file__", "")]})
+
+rows = (spark.range(16, numPartitions=16)
+        .mapInPandas(report, "installer string, src string").collect())
+assert all("pyrate_spark.zip" in r.src for r in rows), rows
+if sys.version_info < (3, 13):
+    assert {r.installer for r in rows} == {
+        "pyrate_spark.operators.worker_setup"}, rows
 print(f"SUBMIT_OK rows={n}")
 spark.stop()
 """
